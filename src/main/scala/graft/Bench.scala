@@ -93,49 +93,6 @@ object Bench {
     mb / ((System.nanoTime() - t0) / 1e9)
   }
 
-  /** Pre-provision guest free pages before a measured ladder phase:
-    * touch up to `gib` GiB of direct memory in bounded chunks, freeing
-    * each chunk immediately. Guest-freed pages stay guest-resident, so
-    * the MEASURED window's tmpfs shuffle writes and page-cache faults
-    * reuse warm pages instead of taking the host's slow fresh-provision
-    * path — the same reasoning as -XX:+AlwaysPreTouch (BENCH.md run 11),
-    * extended to the non-heap page demand, and consistent with retries
-    * running faster than first attempts (pages warmed by the failed
-    * attempt). Applied identically before every level so it cannot bias
-    * the pair; time-capped so a storm cannot eat the wall budget (a
-    * partial pre-fault just means the level's own health stamps tell
-    * the story as before).
-    *
-    * MEASURED (2026-08-20 A/B, 2x2 interleaved L4-only runs): no
-    * improvement — default stays 0. Explanation consistent with the
-    * data: guest-FREED pages do not stay host-backed (free-page
-    * reporting returns the frames to the hypervisor), so pre-fault
-    * warmth evaporates at release; the retry speedup comes from pages
-    * still RESIDENT (tmpfs files, page cache) at retry time, which a
-    * touch-and-free conditioner cannot reproduce. Knob kept for
-    * experiments on hosts without free-page reporting.
-    */
-  def prefault(gib: Int, capS: Int = 35): Double = {
-    if (gib <= 0) return 0.0
-    val chunk = 256 << 20
-    val total = gib.toLong << 30
-    val deadline = System.nanoTime() + capS * 1000L * 1000 * 1000
-    val t0 = System.nanoTime()
-    var done = 0L
-    while (done < total && System.nanoTime() < deadline) {
-      val b = java.nio.ByteBuffer.allocateDirect(chunk)
-      var off = 0
-      while (off < chunk) { b.put(off, 1.toByte); off += 4096 }
-      try b.asInstanceOf[sun.nio.ch.DirectBuffer].cleaner().clean()
-      catch { case _: Throwable => () }
-      done += chunk
-    }
-    val secs = (System.nanoTime() - t0) / 1e9
-    println(f"[bench] prefault ${done >> 30} GiB in $secs%.1fs " +
-      f"(${(done >> 20) / math.max(secs, 0.001)}%.0f MB/s)")
-    secs
-  }
-
   /** /proc/stat line 1, jiffies: user nice sys idle iowait irq softirq
     * steal. Deltas across a phase give the host-wide CPU split — the
     * memory-provisioning storm shows up as sys >> user, co-tenant load
@@ -262,18 +219,9 @@ object Bench {
       if (replicate <= 1) base.repartition(parts)
       else base.repartition(parts).flatMap(d => (0 until replicate).map(r =>
         d.copy(doc_id = s"${d.doc_id}_$r")))
-    val verbose = sys.env.get("SPARK_GRAFT_PHASES").contains("1")
-    def ph[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (verbose) println(f"[phase] $name ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      r
-    }
-    val nDocs = ph("base.count")(base.count()) * math.max(1, replicate)
-    val res = ph("Pipeline.run")(
-      Pipeline.run(spark, docs, graft.kb.Registry.seed(spark).toDF()))
-    val nTriples = ph("triples.count")(res.triples.count())
-    (nDocs, nTriples)
+    val nDocs = base.count() * math.max(1, replicate)
+    val res = Pipeline.run(spark, docs, graft.kb.Registry.seed(spark).toDF())
+    (nDocs, res.triples.count())
   }
 
   def main(args: Array[String]): Unit = {
@@ -898,8 +846,7 @@ object Bench {
     // Executors are the unit being scaled; keep their storage pool out of
     // the picture entirely (checkpoint + input blocks on tmpfs disk) so
     // a small-executor-count level is not starved by eviction storms.
-    if (mode != "threads" && !sys.props.contains("graft.ckpt.level") &&
-        !sys.env.contains("SPARK_GRAFT_CKPT_LEVEL"))
+    if (mode != "threads" && !sys.props.contains("graft.ckpt.level"))
       sys.props("graft.ckpt.level") = "disk"
     def load1: Double =
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
@@ -1216,12 +1163,6 @@ object Bench {
           // the whole run) at load 7.3 while the box was idle
           l1 <= math.max(quietLoad, loadBaseline + 0.5) || busyCores() <= 3.0
         } else awaitQuiet(l)
-      // prefault may OOM on direct memory when the cleaner is
-      // inaccessible (ADVICE r3); it is an optional conditioner and must
-      // never kill the level before runLevel's own try can catch it
-      try prefault(sys.env.getOrElse("SPARK_GRAFT_PREFAULT_GIB", "0").toInt)
-      catch { case t: Throwable =>
-        println(s"[bench] prefault failed (${t.getClass.getSimpleName}); continuing") }
       val fault = probeFaultMBps()
       faultSeen += ((l, fault))
       println(f"[bench] L$l host_fault_mbps=$fault%.0f")

@@ -227,23 +227,6 @@ object BenchCluster {
       .config("spark.local.dir", Bench.localDir)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    if (sys.env.get("SPARK_GRAFT_PHASES").contains("1"))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val m = i.taskMetrics
-          val wall = (i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)) / 1e3
-          if (wall > 0.5)
-            println(f"[stage] ${i.stageId}%4d wall=$wall%6.1fs " +
-              f"run=${m.executorRunTime / 1e3}%7.1fs cpu=${m.executorCpuTime / 1e9}%7.1fs " +
-              f"gc=${m.jvmGCTime / 1e3}%6.1fs tasks=${i.numTasks}%4d ${i.name.take(50)}")
-          if (m.executorCpuTime / 1e9 > 40 &&
-              sys.env.get("SPARK_GRAFT_STAGE_DETAILS").contains("1"))
-            println(s"[stage-details] ${i.stageId}\n" + i.details.linesIterator
-              .filter(_.contains("graft")).take(8).mkString("\n"))
-        }
-      })
     // wait for every executor to register so the timed run sees full
     // parallelism from its first stage
     val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000

@@ -17,22 +17,15 @@ import org.apache.spark.storage.StorageLevel
   * buffer: same reuse semantics, O(partitions) live objects, GC flat.
   */
 object Ckpt {
-  /** Storage knob: system property graft.ckpt.level (set e.g. by Bench
-    * before building cluster-mode plans) falls back to env
-    * SPARK_GRAFT_CKPT_LEVEL. "deser" restores the Spark default
-    * (deserialized rows); "disk" forces DISK_ONLY — on multi-executor
-    * runs checkpoint blocks then live on (tmpfs-backed) executor disk,
-    * putting zero pressure on the storage memory pool whose eviction
-    * storms starved small executors.
+  /** Storage level. System property graft.ckpt.level=disk (set by
+    * Bench's executor ladder before building cluster-mode plans) forces
+    * DISK_ONLY: on multi-executor runs checkpoint blocks then live on
+    * (tmpfs-backed) executor disk, putting zero pressure on the storage
+    * memory pool whose eviction storms starved small executors.
     */
   def storage: StorageLevel =
-    sys.props.get("graft.ckpt.level")
-      .orElse(sys.env.get("SPARK_GRAFT_CKPT_LEVEL"))
-      .getOrElse("ser") match {
-      case "deser" => StorageLevel.MEMORY_AND_DISK
-      case "disk" => StorageLevel.DISK_ONLY
-      case _ => StorageLevel.MEMORY_AND_DISK_SER
-    }
+    if (sys.props.get("graft.ckpt.level").contains("disk")) StorageLevel.DISK_ONLY
+    else StorageLevel.MEMORY_AND_DISK_SER
   def apply[T](ds: Dataset[T]): Dataset[T] =
     ds.localCheckpoint(true, storage)
 }

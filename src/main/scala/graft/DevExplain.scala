@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Scratch: dump formatted plans for plan-quality review (not part of
-  * the driver contract).
+/** Plan-quality review (not part of the driver contract):
+  * `sbt "runMain graft.DevExplain [sfdir] [exec=<query> | audit[=q1,q2]]"`.
+  * The default prints the formatted plan of every query.
   */
 object DevExplain {
   def main(args: Array[String]): Unit = {
@@ -62,25 +63,8 @@ object DevExplain {
       spark.stop()
       return
     }
-    Seq("q1_agg", "q3_join_agg", "q8_pagination", "t6_ngram_neardup",
-      "e1_ann_topk", "kg_sections", "t10_dedup_canon",
-      "kg_media_resized", "kg_media_frames",
-      "q16_asof", "q17_rollup", "q18_range_join", "q19_interval_join",
-      "q20_cube", "q21_median", "q22_pivot", "t11_splits", "t12_pack",
-      "t13_chunk", "q23_skew_join", "t14_stratified",
-      "t15_group_sample", "q24_grouping_sets", "q25_event_windows",
-      "t16_repetition", "t17_decontam", "t18_token_budget",
-      "t19_vocab", "q26_funnel", "q27_json", "q28_gap_sessions",
-      "q29_path2", "q30_pagerank", "q31_cohort", "q32_histogram",
-      "q33_corr", "t20_zscore", "q34_bloom_join",
-      "q35_triangles", "kg_entity_rank", "q36_window_suite",
-      "q37_collect", "q38_star_join", "q41_bm25", "q42_setops",
-      "q43_range_frame", "q44_subquery", "q45_unpivot", "q40_date_spine",
-      "q46_fill_forward", "q47_full_outer", "t21_regex_mine",
-      "t22_para_dedup", "t23_redact", "q48_sliding_dau",
-      "t24_rrf", "t25_bigram_lm", "t26_pmi", "t27_tfidf",
-      "t28_entropy", "t29_kl", "q49_markov", "q50_paths",
-      "e5_kmeans_step", "q51_rfm", "q52_benford", "t30_dsir").foreach { q =>
+    // default: the formatted plan of every query
+    SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
       println(s"\n===== $q =====")
       SparkEntry.queries(q)(spark, dir).explain("formatted")
     }

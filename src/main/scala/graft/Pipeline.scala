@@ -57,15 +57,6 @@ object Pipeline {
     */
   def run(spark: SparkSession, docs: Dataset[InputDoc], registry: DataFrame,
           regStats: Option[(Long, Long)] = None): Result = {
-    // dev-only sub-phase timer (same env as Bench's phase output)
-    val verbose = sys.env.get("SPARK_GRAFT_PHASES").contains("1")
-    def ph[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (verbose)
-        println(f"[pipe] $name ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      r
-    }
     // ONE-PASS doc prep (r4): a single InputDoc deserialization and a
     // single text assembly serve all four per-doc derivations — trie
     // NER, regex NER, document text, media spans. The previous shape
@@ -101,11 +92,7 @@ object Pipeline {
     // an eager materializing count removed ~2.7 s of duplicated NER
     // from the linker stage but cost ~6.7 s as a standalone job
     // barrier — the duplication is cheap parallel work while the
-    // barrier is pure serial latency, so LAZY stays the default;
-    // SPARK_GRAFT_PREP_EAGER=1 flips it for A/B on other topologies.
-    if (sys.env.get("SPARK_GRAFT_PREP_EAGER").contains("1") ||
-        sys.props.get("graft.prep.eager").contains("1"))
-      ph("prep.eager")(prep.count())
+    // barrier is pure serial latency, so the persist stays LAZY.
     // (r6 A/B, rejected: deriving text from the docs dataset instead of
     // the prep persist avoids the cold-persist race but re-pays the
     // InputDoc Kryo deserialize per doc — measured neutral-to-worse at
@@ -131,8 +118,7 @@ object Pipeline {
     // statically (runCached's gazetteer seed) pass (max id, rows) in and
     // skip the job entirely (r6).
     val (base, regRows) = regStats.getOrElse {
-      val regAgg = ph("regAgg")(
-        registry.agg(max(col("id")), count(lit(1))).collect()(0))
+      val regAgg = registry.agg(max(col("id")), count(lit(1))).collect()(0)
       (regAgg.getLong(0), regAgg.getLong(1))
     }
 
@@ -140,15 +126,15 @@ object Pipeline {
     // references this frame 5x and planning cost explodes otherwise.
     // Candidate lists stay a separate mention-keyed frame — NOT a wide
     // column dragged through every downstream shuffle of `linked`.
-    val (linkedRaw, mentionCandidates) = ph("linker")(
+    val (linkedRaw, mentionCandidates) =
       Linker.linkWithCandidates(spark, merged, text, registry,
-        registryRows = Some(regRows)))
-    val linked = ph("ckpt.linked")(Ckpt(linkedRaw))
+        registryRows = Some(regRows))
+    val linked = Ckpt(linkedRaw)
 
     val nil = linked.filter(col("is_nil") &&
       // DATE-skip mentions never cluster (reference P3/P7 interplay)
       col("mention_type") =!= "DATE")
-    val clusterRes = ph("nilcluster")(NilCluster.clusterFull(spark, nil))
+    val clusterRes = NilCluster.clusterFull(spark, nil)
     val clustersRaw = clusterRes.clusters
 
     // Deterministic contiguous new-entity ids (W7, reference
@@ -163,10 +149,7 @@ object Pipeline {
     // broadcast of a local table. Beyond the guard, fall back to the
     // distributed window formulation.
     val clusterGuard = 200000
-    val clusterHead = ph("clusters.take")(clustersRaw.take(clusterGuard + 1))
-    if (verbose)
-      println(s"[pipe] nil path local=${clusterRes.isLocal} " +
-        s"clusters=${clusterHead.length}")
+    val clusterHead = clustersRaw.take(clusterGuard + 1)
     val clusters: DataFrame =
       if (clusterHead.length <= clusterGuard) {
         import org.apache.spark.sql.Row
@@ -246,7 +229,7 @@ object Pipeline {
         when(col("nil_name").isNotNull, col("cluster_type"))
           .otherwise(col("entity_type")))
       .filter(col("name").isNotNull)
-      .transform(df => ph("ckpt.resolved")(Ckpt(df)))
+      .transform(Ckpt(_))
 
     // :mentions / :typedAs / :sameAsCluster / :coOccursWith in ONE scan
     // of the resolved checkpoint + ONE distinct (r6 fuses the adjacency

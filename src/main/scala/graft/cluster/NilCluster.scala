@@ -55,10 +55,10 @@ object NilCluster {
     * the within-block pair join quadratic (10^6 members -> 10^12 pairs).
     * Surfaces in an overfull block still pair through their OTHER keys
     * (remaining tokens + 2-char prefix), so recall degrades gracefully
-    * and identically on the local and distributed paths.
+    * and identically on the local and distributed paths. Both paths take
+    * it as a defaulted `blockCap` parameter.
     */
-  def BlockCap: Int =
-    sys.props.get("graft.nilcluster.blockCap").map(_.toInt).getOrElse(5000)
+  val BlockCap: Int = 5000
 
   /** Max distinct surfaces for the driver-side path. ~100k surfaces x
     * 64-d float = ~26 MB — comfortably driver-sized; beyond that the
@@ -128,7 +128,8 @@ object NilCluster {
     * center)). Deterministic: input order-independent (surfaces sorted,
     * min-id union-find, explicit tie-breaks).
     */
-  def clusterSurfacesLocal(surfacesIn: Seq[String]): Map[String, (String, Array[Float])] = {
+  def clusterSurfacesLocal(surfacesIn: Seq[String],
+      blockCap: Int = BlockCap): Map[String, (String, Array[Float])] = {
     val surfaces = surfacesIn.distinct.sorted.toArray
     val n = surfaces.length
     if (n == 0) return Map.empty
@@ -140,7 +141,7 @@ object NilCluster {
         blockKeys(surfaces(i)).foreach(k => byKey(k) = i :: byKey.getOrElse(k, Nil))
       }
       byKey.valuesIterator
-        .filter(_.size <= BlockCap) // same hot-block cap as distributed
+        .filter(_.size <= blockCap) // same hot-block cap as distributed
         .flatMap { is =>
           val v = is.sorted.toArray
           for (a <- v.indices.iterator; b <- (a + 1) until v.length)
@@ -165,14 +166,14 @@ object NilCluster {
     c1.zipWithIndex.groupBy(_._1).values.foreach { members =>
       val ms = members.map(_._2).sorted
       val pairs: Iterator[(Int, Int)] =
-        if (ms.length <= BlockCap)
+        if (ms.length <= blockCap)
           for (x <- ms.indices.iterator; y <- (x + 1) until ms.length)
             yield (ms(x), ms(y))
         else
           (0 until SubBands).iterator.flatMap { g =>
             ms.groupBy(i => signBand(embs(i), g)).toSeq.sortBy(_._1)
               .iterator.map(_._2)
-              .filter(_.length <= BlockCap)
+              .filter(_.length <= blockCap)
               .flatMap { grp =>
                 val v = grp.sorted
                 for (x <- v.indices.iterator; y <- (x + 1) until v.length)
@@ -255,7 +256,7 @@ object NilCluster {
   private val signBucketUdf = udf((v: Seq[Float]) => signBucket(v.toArray))
   private val signBandUdf = udf((v: Seq[Float], g: Int) => signBand(v.toArray, g))
 
-  private def blockedPairsDF(surfaces: DataFrame): DataFrame = {
+  private def blockedPairsDF(surfaces: DataFrame, blockCap: Int): DataFrame = {
     val withKeys = surfaces
       .withColumn("bkey", explode(array_union(
         array_distinct(split(col("surface"), "\\s+")),
@@ -265,7 +266,7 @@ object NilCluster {
     // aggregate instead of a quadratic blowup on stop-token blocks
     val keyCounts = withKeys.groupBy("bkey")
       .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= BlockCap)
+      .filter(col("bn") <= blockCap)
       .select("bkey")
     val capped = withKeys.join(keyCounts, Seq("bkey"))
     val a = capped.select(col("bkey"), col("surface").as("src"))
@@ -278,11 +279,12 @@ object NilCluster {
   /** Distributed surface clustering -> DataFrame(surface, cluster_key,
     * center). Same stages/metrics/keys as the local path.
     */
-  def clusterSurfacesDistributed(spark: SparkSession, surfacesDf: DataFrame): DataFrame = {
+  def clusterSurfacesDistributed(spark: SparkSession, surfacesDf: DataFrame,
+      blockCap: Int = BlockCap): DataFrame = {
     val surfaces = surfacesDf.select("surface").distinct()
       .withColumn("emb", embedUdf(col("surface"))).cache()
 
-    val e1 = blockedPairsDF(surfaces)
+    val e1 = blockedPairsDF(surfaces, blockCap)
       .filter(damLevNormUdf(col("src"), col("dst")) < Stage1Threshold)
     val cc1 = ConnectedComponents.run(spark,
       surfaces.select(col("surface").as("id")), e1)
@@ -302,14 +304,14 @@ object NilCluster {
     // enumerate the same pair set.
     val c1Sizes = s1.groupBy("c1").agg(count(lit(1)).as("c1n"))
     val s1k = s1.join(c1Sizes, Seq("c1"))
-    val s1smallK = s1k.filter(col("c1n") <= BlockCap)
+    val s1smallK = s1k.filter(col("c1n") <= blockCap)
       .withColumn("band", lit(-1)).withColumn("sub", lit(-1))
-    val s1bigK = s1k.filter(col("c1n") > BlockCap)
+    val s1bigK = s1k.filter(col("c1n") > blockCap)
       .withColumn("band", explode(array((0 until SubBands).map(lit): _*)))
       .withColumn("sub", signBandUdf(col("emb"), col("band")))
     val s1kb = s1smallK.unionByName(s1bigK)
     val subOk = s1kb.groupBy("c1", "band", "sub").agg(count(lit(1)).as("subn"))
-      .filter(col("subn") <= BlockCap).select("c1", "band", "sub")
+      .filter(col("subn") <= blockCap).select("c1", "band", "sub")
     val s1c = s1kb.join(subOk, Seq("c1", "band", "sub"))
     val l = s1c.select(col("c1"), col("band"), col("sub"),
       col("surface").as("src"), col("emb").as("eA"))
@@ -359,9 +361,9 @@ object NilCluster {
         // sub-cap groups keep the exact all-pairs join
         val pkSizes = bigSurf.groupBy("pk").agg(count(lit(1)).as("pn"))
         val pkSmall = bigSurf.join(
-          pkSizes.filter(col("pn") <= BlockCap).select("pk"), Seq("pk"))
+          pkSizes.filter(col("pn") <= blockCap).select("pk"), Seq("pk"))
         val pkHuge = bigSurf.join(
-          pkSizes.filter(col("pn") > BlockCap).select("pk"), Seq("pk"))
+          pkSizes.filter(col("pn") > blockCap).select("pk"), Seq("pk"))
         val ebSmall = pkSmall.select(col("pk"), col("surface").as("src"))
           .join(pkSmall.select(col("pk"), col("surface").as("dst")), Seq("pk"))
           .filter(col("src") < col("dst"))
@@ -371,7 +373,7 @@ object NilCluster {
           array(substring(col("surface"), 1, 2)))))
         val hugeOk = hugeKeyed.groupBy("pk", "bkey")
           .agg(count(lit(1)).as("bn"))
-          .filter(col("bn") <= BlockCap).select("pk", "bkey")
+          .filter(col("bn") <= blockCap).select("pk", "bkey")
         val hugeCapped = hugeKeyed.join(hugeOk, Seq("pk", "bkey"))
         val ebHuge = hugeCapped.select(col("pk"), col("bkey"), col("surface").as("src"))
           .join(hugeCapped.select(col("pk"), col("bkey"), col("surface").as("dst")),
@@ -397,9 +399,9 @@ object NilCluster {
     val fin = result.select("surface", "emb", "cluster_key").cache()
     val finSizes = fin.groupBy("cluster_key").agg(count(lit(1)).as("fn"))
     val finSmall = fin.join(
-      finSizes.filter(col("fn") <= BlockCap).select("cluster_key"), Seq("cluster_key"))
+      finSizes.filter(col("fn") <= blockCap).select("cluster_key"), Seq("cluster_key"))
     val finBig = fin.join(
-      finSizes.filter(col("fn") > BlockCap).select("cluster_key"), Seq("cluster_key"))
+      finSizes.filter(col("fn") > blockCap).select("cluster_key"), Seq("cluster_key"))
 
     val fa = finSmall.select(col("cluster_key"), col("surface").as("sA"), col("emb").as("eA"))
     val fb = finSmall.select(col("cluster_key"), col("surface").as("sB"), col("emb").as("eB"))

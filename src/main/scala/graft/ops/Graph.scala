@@ -28,12 +28,11 @@ object Graph {
   /** Row cap under which frontier/rank side tables are broadcast (and,
     * for PageRank, iterated as a driver-resident vector): ~2M rows of
     * (long, long) is tens of MB — the same executor-fit reasoning as
-    * Linker.broadcastMaxRows. Above the cap every kernel falls back to
-    * the shuffle formulation unchanged. Overridable for tests.
+    * Linker.BroadcastMaxRows. Above the cap every kernel falls back to
+    * the shuffle formulation unchanged. Each kernel that applies the gate
+    * takes it as a defaulted `broadcastMaxRows` parameter.
     */
-  def broadcastMaxRows: Long =
-    sys.props.get("graft.graph.broadcastMaxRows").map(_.toLong)
-      .getOrElse(2000000L)
+  val BroadcastMaxRows: Long = 2000000L
 
   /** Directed edge list from an ordered undirected pair table (a < b). */
   def symmetrize(pairs: DataFrame, a: String = "a", b: String = "b"): DataFrame =
@@ -55,7 +54,8 @@ object Graph {
     * proportional to the seed neighborhood, never to |V|.
     */
   def twoHopFromSeeds(edges: DataFrame, seeds: DataFrame,
-                      edgesMaterialized: Boolean = false): DataFrame = {
+                      edgesMaterialized: Boolean = false,
+                      broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     // edges feeds two joins and hop1 feeds two consumers — materialize at
     // the stage boundary or every branch re-derives the whole edge list
     // (CLAUDE.md multi-branch invariant); callers that pass an already-
@@ -153,7 +153,8 @@ object Graph {
     */
   def pageRank(edges: DataFrame, iterations: Int,
                scale: Long = 1000000000L,
-               edgesMaterialized: Boolean = false): DataFrame = {
+               edgesMaterialized: Boolean = false,
+               broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     // the edge list is read every iteration — materialize it once instead
     // of re-deriving the upstream (self-join + distinct) per iteration
     val e = if (edgesMaterialized) edges else edges.localCheckpoint(true)

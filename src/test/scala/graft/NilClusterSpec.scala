@@ -62,23 +62,21 @@ class NilClusterSpec extends SparkTestBase {
     // both hot blocks are dropped, the remaining 1-member token blocks
     // yield no pairs -> all singletons. Both paths must agree either way.
     val stopSurfaces = Seq("the fastkey", "the fastkay", "the unrelated")
-    def localKeys = NilCluster.clusterSurfacesLocal(stopSurfaces).view.mapValues(_._1).toMap
-    def distKeys = NilCluster.clusterSurfacesDistributed(spark,
-        stopSurfaces.toDF("surface"))
+    def localKeys(cap: Int) = NilCluster.clusterSurfacesLocal(stopSurfaces, cap)
+      .view.mapValues(_._1).toMap
+    def distKeys(cap: Int) = NilCluster.clusterSurfacesDistributed(spark,
+        stopSurfaces.toDF("surface"), cap)
       .select("surface", "cluster_key").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
 
-    val unCapped = localKeys
+    val unCapped = localKeys(NilCluster.BlockCap)
     assert(unCapped("the fastkey") == unCapped("the fastkay"))
     assert(unCapped("the unrelated") != unCapped("the fastkey"))
-    assert(distKeys == unCapped)
+    assert(distKeys(NilCluster.BlockCap) == unCapped)
 
-    sys.props("graft.nilcluster.blockCap") = "2"
-    try {
-      val capped = localKeys
-      assert(capped.values.toSet.size == 3, "hot blocks dropped -> singletons")
-      assert(distKeys == capped, "distributed path honors the same cap")
-    } finally sys.props.remove("graft.nilcluster.blockCap")
+    val capped = localKeys(2)
+    assert(capped.values.toSet.size == 3, "hot blocks dropped -> singletons")
+    assert(distKeys(2) == capped, "distributed path honors the same cap")
   }
 
   test("mega stage-1 cluster passes stage-2/breakup/medoid in bounded pairs") {
@@ -95,20 +93,17 @@ class NilClusterSpec extends SparkTestBase {
         // chain link: shares tail token with the NEXT group's first member
         f"x$g%d aaaa${(g + 1) * members}%02d"
     }.distinct
-    sys.props("graft.nilcluster.blockCap") = "5"
-    try {
-      val df = surfaces.toDF("surface")
-      val out = NilCluster.clusterSurfacesDistributed(spark, df)
-        .select("surface", "cluster_key", "center").collect()
-      assert(out.map(_.getString(0)).toSet == surfaces.toSet,
-        "every surface survives the capped stages")
-      assert(out.forall(_.get(2) != null), "every cluster gets a center")
-      val again = NilCluster.clusterSurfacesDistributed(spark, df)
-        .select("surface", "cluster_key").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      val first = out.map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(again == first, "capped path is deterministic")
-    } finally sys.props.remove("graft.nilcluster.blockCap")
+    val df = surfaces.toDF("surface")
+    val out = NilCluster.clusterSurfacesDistributed(spark, df, blockCap = 5)
+      .select("surface", "cluster_key", "center").collect()
+    assert(out.map(_.getString(0)).toSet == surfaces.toSet,
+      "every surface survives the capped stages")
+    assert(out.forall(_.get(2) != null), "every cluster gets a center")
+    val again = NilCluster.clusterSurfacesDistributed(spark, df, blockCap = 5)
+      .select("surface", "cluster_key").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val first = out.map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(again == first, "capped path is deterministic")
   }
 
   test("oversize component: banded stage-2 keeps local and distributed identical") {
@@ -122,19 +117,18 @@ class NilClusterSpec extends SparkTestBase {
       (0 until members).map(i => f"x$g%d aaaa${g * members + i}%02d") :+
         f"x$g%d aaaa${(g + 1) * members}%02d"
     }.distinct
-    sys.props("graft.nilcluster.blockCap") = "5"
-    try {
-      val local = NilCluster.clusterSurfacesLocal(surfs).view.mapValues(_._1).toMap
-      val dist = NilCluster.clusterSurfacesDistributed(spark, surfs.toDF("surface"))
-        .select("surface", "cluster_key").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(dist == local, "banded stage-2 must not diverge between paths")
-      // the banded rule must still MERGE near-dup surfaces inside the
-      // oversize component (an over-selective sub-key would leave them
-      // all separate): some cluster has more than one member
-      assert(local.values.toSeq.distinct.size < surfs.size,
-        "stage 1+2 must merge at least one near-dup pair under the guard")
-    } finally sys.props.remove("graft.nilcluster.blockCap")
+    val local = NilCluster.clusterSurfacesLocal(surfs, blockCap = 5)
+      .view.mapValues(_._1).toMap
+    val dist = NilCluster.clusterSurfacesDistributed(spark, surfs.toDF("surface"),
+        blockCap = 5)
+      .select("surface", "cluster_key").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(dist == local, "banded stage-2 must not diverge between paths")
+    // the banded rule must still MERGE near-dup surfaces inside the
+    // oversize component (an over-selective sub-key would leave them
+    // all separate): some cluster has more than one member
+    assert(local.values.toSeq.distinct.size < surfs.size,
+      "stage 1+2 must merge at least one near-dup pair under the guard")
   }
 
   test("end-to-end cluster(): assignments, mode title, deterministic") {

@@ -459,32 +459,25 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("ANN sign-LSH hot-bucket cap: refine skewed orthant, drop degenerate") {
-    val prev = sys.props.get("graft.ann.bucketCap")
-    sys.props("graft.ann.bucketCap") = "20"
-    try {
-      // 30 vectors all in the positive orthant on the leading 8 dims (ONE
-      // hot level-1 bucket, 30 > cap); the sign of dim 9 splits the
-      // refinement into two sub-cap halves by id parity
-      val vecs = (0 until 30).map { i =>
-        val v = Array.fill(16)(0.1f + (i % 7) * 0.01f)
-        v(8) = if (i % 2 == 0) 1f else -1f
-        (i.toLong, v.toSeq)
-      }.toDF("id", "vec").withColumn("vec", col("vec").cast("array<float>"))
-      val res = graft.ops.Ann.signLshTopK(vecs, 3).collect()
-      assert(res.nonEmpty, "refined hot bucket must still yield neighbors")
-      // pairs only form within a refined sub-bucket (same dim-9 sign)
-      res.foreach(r => assert(r.getLong(0) % 2 == r.getLong(1) % 2))
-      // fully degenerate skew: identical sign pattern on BOTH levels ->
-      // the refined bucket stays oversize and is dropped (bounded work,
-      // graceful recall loss — never a quadratic blowup)
-      val allSame = (0 until 30)
-        .map(i => (i.toLong, Seq.fill(16)(0.5f + i * 0.001f)))
-        .toDF("id", "vec").withColumn("vec", col("vec").cast("array<float>"))
-      assert(graft.ops.Ann.signLshTopK(allSame, 3).count() == 0)
-    } finally prev match {
-      case Some(p) => sys.props("graft.ann.bucketCap") = p
-      case None => sys.props.remove("graft.ann.bucketCap")
-    }
+    // 30 vectors all in the positive orthant on the leading 8 dims (ONE
+    // hot level-1 bucket, 30 > cap); the sign of dim 9 splits the
+    // refinement into two sub-cap halves by id parity
+    val vecs = (0 until 30).map { i =>
+      val v = Array.fill(16)(0.1f + (i % 7) * 0.01f)
+      v(8) = if (i % 2 == 0) 1f else -1f
+      (i.toLong, v.toSeq)
+    }.toDF("id", "vec").withColumn("vec", col("vec").cast("array<float>"))
+    val res = graft.ops.Ann.signLshTopK(vecs, 3, bucketCap = 20).collect()
+    assert(res.nonEmpty, "refined hot bucket must still yield neighbors")
+    // pairs only form within a refined sub-bucket (same dim-9 sign)
+    res.foreach(r => assert(r.getLong(0) % 2 == r.getLong(1) % 2))
+    // fully degenerate skew: identical sign pattern on BOTH levels ->
+    // the refined bucket stays oversize and is dropped (bounded work,
+    // graceful recall loss — never a quadratic blowup)
+    val allSame = (0 until 30)
+      .map(i => (i.toLong, Seq.fill(16)(0.5f + i * 0.001f)))
+      .toDF("id", "vec").withColumn("vec", col("vec").cast("array<float>"))
+    assert(graft.ops.Ann.signLshTopK(allSame, 3, bucketCap = 20).count() == 0)
   }
 
   test("ANN IVF: probing all lists equals brute force; pruning stays deterministic") {

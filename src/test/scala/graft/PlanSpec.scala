@@ -106,7 +106,7 @@ class PlanSpec extends SparkTestBase {
     val text = Pipeline.docText(spark, docs)
     val mentions = TrieNer.mentions(spark, docs)
     val reg = graft.kb.Registry.seed(spark).toDF()
-    val linkable = Linker.withEmbeddings(spark, mentions, text).toDF()
+    val linkable = Linker.withEmbeddingsDF(spark, mentions, text)
     val cands = Linker.candidates(spark, linkable, reg)
     val wide = Set("m_emb", "e_emb", "ctx_left", "ctx_right", "emb")
     def shuffles(p: org.apache.spark.sql.execution.SparkPlan):
