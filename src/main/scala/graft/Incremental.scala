@@ -18,17 +18,23 @@ import graft.tables.IceLite
   * not see each other's new entities; every later batch does.
   *
   * State tables under `workDir`:
-  *   documents        InputDoc rows            MERGE key (doc_id)
-  *   mentions         linked mention rows      MERGE key (doc_id, annset, ann_id)
-  *   entity_registry  EntityRecord rows        MERGE key (id, indexer)
-  *   triples          (doc_id, subj, pred, obj) MERGE key all four
-  *   lineage          (batch_id, stage, status) append-only, no wall-clock
-  *   metrics          (batch_id, metric, value) append-only (wall-clock ok;
-  *                    excluded from identity checks)
+  *   documents           InputDoc rows             MERGE key (doc_id)
+  *   mentions            linked mention rows       replaced per doc_id
+  *   mention_candidates  top-k candidate lists     replaced per doc_id
+  *   triples             (doc_id, subj, pred, obj) replaced per doc_id
+  *   entity_registry     EntityRecord rows         MERGE key (id, indexer)
+  *   lineage             (batch_id, stage, status) append-only, no wall-clock
+  *   metrics             (batch_id, metric, value) append-only (wall-clock
+  *                       ok; excluded from identity checks)
+  *
+  * Re-sending a document replaces it, as the reference's document save
+  * does (delete-then-reinsert, document.js:173-249): its mentions,
+  * candidates and triples rows are replaced wholesale, so nothing the
+  * old text produced survives.
   *
   * Crash consistency: every table commit is an atomic pointer swap; the
   * lineage "done" row for a batch is written LAST, so a kill at any
-  * point re-runs the batch, and MERGE INTO keyed upserts make the replay
+  * point re-runs the batch, and the keyed commits make the replay
   * idempotent — the final tables are byte-identical to an uninterrupted
   * run (tested).
   */
@@ -84,36 +90,49 @@ object Incremental {
   def run(spark: SparkSession, docs: Dataset[InputDoc], workDir: String,
           numBatches: Int, upToBatch: Int = Int.MaxValue): Tables = {
     import spark.implicits._
-    val t = Tables(workDir)
-
-    if (!t.registry.exists) t.registry.overwrite(Registry.seed(spark).toDF())
-
+    val (t, runBatch) = resume(spark, workDir)
     val batched = withBatch(docs, numBatches).cache()
-    val done = doneBatches(spark, t)
-    val pinned = pinnedSnapshots(spark, t)
     var ran = 0
-
     (0 until numBatches).foreach { b =>
-      if (!done.contains(b) && ran < upToBatch) {
-        val batchDocs = batched.filter(col("batch_id") === b)
-          .drop("batch_id").as[InputDoc]
-        processBatch(spark, t, batchDocs, b, pinned.get(b))
-        ran += 1
-      }
+      val batchDocs = batched.filter(col("batch_id") === b)
+        .drop("batch_id").as[InputDoc]
+      if (ran < upToBatch && runBatch(batchDocs, b)) ran += 1
     }
     batched.unpersist()
     t
   }
 
+  /** The resume step shared by [[run]] and
+    * [[graft.streaming.StreamKb.populate]]: open the tables under
+    * `workDir`, seeding the registry on first use, and return them with
+    * a runner for batch `b` that skips the batch when its done row
+    * exists and otherwise runs it against its pinned registry snapshot
+    * (a first attempt pins the current one). The runner says whether it
+    * ran the batch.
+    */
+  private[graft] def resume(spark: SparkSession, workDir: String)
+      : (Tables, (Dataset[InputDoc], Int) => Boolean) = {
+    val t = Tables(workDir)
+    if (!t.registry.exists) t.registry.overwrite(Registry.seed(spark).toDF())
+    val done = doneBatches(spark, t)
+    val pinned = pinnedSnapshots(spark, t)
+    (t, (batchDocs, b) => !done.contains(b) && {
+      processBatch(spark, t, batchDocs, b, pinned.get(b))
+      true
+    })
+  }
+
   /** One micro-batch of KB population against `t`: pin the registry
-    * snapshot, run the pipeline, MERGE results, append metrics, and
-    * commit the lineage "done" row LAST (the resume point). Shared by
-    * the batch loop above and the Structured Streaming front-end
-    * ([[graft.streaming.StreamKb.populate]]) — the crash/replay protocol
-    * is identical: a replay of batch `b` (foreachBatch re-invocation or
-    * loop resume) is skipped if its done row exists, and otherwise
-    * re-runs against the PINNED registry snapshot, making the keyed
-    * MERGEs byte-identical to an uninterrupted run.
+    * snapshot, run the pipeline, merge the documents and commit the
+    * result ([[commitResult]]), append metrics, and commit the lineage
+    * "done" row LAST (the resume point). Shared by the batch loop above
+    * and the Structured Streaming front-end
+    * ([[graft.streaming.StreamKb.populate]]) through [[resume]] — the
+    * crash/replay protocol is identical: a replay of batch `b`
+    * (foreachBatch re-invocation or loop resume) is skipped if its done
+    * row exists, and otherwise re-runs against the PINNED registry
+    * snapshot, making the keyed commits byte-identical to an
+    * uninterrupted run.
     */
   def processBatch(spark: SparkSession, t: Tables, batchDocs: Dataset[InputDoc],
                    b: Int, pinnedSnap: Option[Int]): Unit = {
@@ -134,16 +153,7 @@ object Incremental {
     val res = Pipeline.run(spark, batchDocs, registry)
 
     t.documents.mergeInto(spark, batchDocs.toDF(), Seq("doc_id"))
-    t.mentions.mergeInto(spark,
-      res.linked.select("doc_id", "annset", "ann_id", "mention_type",
-        "start", "end", "mention", "skip", "entity_id", "title",
-        "entity_type", "bi_score", "nil_score", "is_nil", "url", "name"),
-      Seq("doc_id", "annset", "ann_id"))
-    t.candidates.mergeInto(spark, res.candidates,
-      Seq("doc_id", "annset", "ann_id"))
-    t.triples.mergeInto(spark, res.triples,
-      Seq("doc_id", "subj", "pred", "obj"))
-    t.registry.mergeInto(spark, res.newEntities, Seq("id", "indexer"))
+    commitResult(spark, t, batchDocs.select("doc_id"), res)
 
     // one fused counting job instead of four eager .count()s — the
     // per-batch serial driver fraction is the scaling bottleneck
@@ -166,20 +176,39 @@ object Incremental {
     registry.unpersist()
   }
 
+  /** Columns of a `mentions` table row, projected from Pipeline.Result.linked. */
+  private[graft] val MentionCols = Seq("doc_id", "annset", "ann_id",
+    "mention_type", "start", "end", "mention", "skip", "entity_id", "title",
+    "entity_type", "bi_score", "nil_score", "is_nil", "url", "name")
+
+  /** Commit one pipeline result for the docs in `docIds` (one `doc_id`
+    * column): each doc's mentions, candidates and triples rows are
+    * replaced (IceLite.replaceKeys — the stale rows go in the same
+    * snapshot commit that inserts the fresh ones, so a re-run that emits
+    * fewer rows leaves no orphans and a crash never leaves the doc's
+    * annotations missing), and the new entities merge into the registry
+    * by (id, indexer). Keyed throughout, so a replay is idempotent.
+    */
+  private def commitResult(spark: SparkSession, t: Tables, docIds: DataFrame,
+                           res: Pipeline.Result): Unit = {
+    t.mentions.replaceKeys(spark, docIds, res.linked.select(MentionCols.map(col): _*))
+    t.candidates.replaceKeys(spark, docIds, res.candidates)
+    t.triples.replaceKeys(spark, docIds, res.triples)
+    t.registry.mergeInto(spark, res.newEntities, Seq("id", "indexer"))
+  }
+
   /** I3 reannotate flow (reference pipelinehelper/main.py:19-34): fetch
     * stored documents, re-run the pipeline against the CURRENT registry
     * (entities discovered since the original annotation are now linkable
     * — previously-NIL mentions may resolve to ent: links), and REPLACE
-    * the docs' annotations. Stale rows are dropped in the SAME snapshot
-    * commit that inserts the fresh ones (IceLite.replaceKeys), so a
-    * re-run that emits fewer mentions/triples leaves no orphans AND a
-    * crash never leaves a window where the docs' annotations are gone.
+    * the docs' annotations through the same [[commitResult]] step as
+    * [[processBatch]].
     *
     * Crash protocol: a "reannotate_start" lineage row is committed
     * BEFORE any table mutation and a matching "reannotate" row after the
     * last; [[pendingReannotations]] surfaces started-but-unfinished doc
-    * sets so a caller can replay them (replay is idempotent: each
-    * replaceKeys is keyed and the registry merge is keyed).
+    * sets so a caller can replay them (replay is idempotent: the commit
+    * step is keyed).
     */
   def reannotate(spark: SparkSession, workDir: String,
                  docIds: Seq[String]): Tables = {
@@ -197,7 +226,7 @@ object Incremental {
     // would link mentions to entities created by an attempt that "never
     // happened", a state no uninterrupted execution can produce. A
     // dangling start row for the SAME id-set carries the pin to reuse.
-    val snapId = latestDanglingSnap(spark, t, idList)
+    val snapId = danglingAttempts(spark, t).get(idList).flatten
       .getOrElse(t.registry.latestSnapshot.get)
     val registry = t.registry.readSnapshot(spark, snapId).cache()
     val res = Pipeline.run(spark, docs, registry)
@@ -210,25 +239,13 @@ object Incremental {
     val marker = s"${t.lineage.snapshots.size}:$snapId:$idList"
     t.lineage.append(Seq((-1, "reannotate_start", marker))
       .toDF("batch_id", "stage", "status"))
-    val delKeys = docIds.toDF("doc_id")
-    t.mentions.replaceKeys(spark, delKeys,
-      res.linked.select("doc_id", "annset", "ann_id", "mention_type",
-        "start", "end", "mention", "skip", "entity_id", "title",
-        "entity_type", "bi_score", "nil_score", "is_nil", "url", "name"))
-    t.candidates.replaceKeys(spark, delKeys, res.candidates)
-    t.triples.replaceKeys(spark, delKeys, res.triples)
-    t.registry.mergeInto(spark, res.newEntities, Seq("id", "indexer"))
+    commitResult(spark, t, docIds.toDF("doc_id"), res)
     t.lineage.append(Seq((-1, "reannotate", marker))
       .toDF("batch_id", "stage", "status"))
     registry.unpersist()
     t
   }
 
-  /** Doc-id sets of reannotate attempts that started but never recorded
-    * completion (crash recovery: replay each with [[reannotate]] —
-    * idempotent, and the replay gets its own attempt marker so the
-    * crashed attempt's dangling start row never re-flags it).
-    */
   /** One parsed reannotate lineage row: (idList, attempt, pinned registry
     * snapshot, isStart). Tolerates all three historical marker formats —
     * "<ids>" (earliest), "<attempt>:<ids>", "<attempt>:<snap>:<ids>" —
@@ -253,21 +270,18 @@ object Incremental {
         .map(r => parseMarker(r.getString(0), r.getString(1)))
     }
 
-  /** Registry snapshot pinned by the latest UNfinished attempt for this
-    * id-set, if any (None for finished sets, unknown sets, or pre-pin
-    * marker formats — callers then pin the current snapshot).
+  /** Reannotate id-sets whose LATEST attempt (highest marker) has no
+    * done row — a completed replay supersedes a crashed attempt's
+    * dangling start — each with the registry snapshot that attempt
+    * pinned (None for pre-pin marker formats; a replay then pins the
+    * current snapshot).
     */
-  private def latestDanglingSnap(spark: SparkSession, t: Tables,
-                                 idList: String): Option[Int] = {
-    val attempts = reannotateRows(spark, t).filter(_._1 == idList)
-    if (attempts.isEmpty) None
-    else {
+  private def danglingAttempts(spark: SparkSession, t: Tables): Map[String, Option[Int]] =
+    reannotateRows(spark, t).groupBy(_._1).flatMap { case (ids, attempts) =>
       val latest = attempts.map(_._2).max
-      val latestDone = attempts.exists(a => a._2 == latest && !a._4)
-      if (latestDone) None
-      else attempts.collectFirst { case (_, `latest`, Some(s), true) => s }
+      if (attempts.exists(a => a._2 == latest && !a._4)) None
+      else Some(ids -> attempts.collectFirst { case (_, `latest`, Some(s), true) => s })
     }
-  }
 
   /** Registry snapshot ids pinned by UNFINISHED work (batches with a
     * registry_snapshot lineage row but no done row; reannotate attempts
@@ -279,14 +293,7 @@ object Incremental {
     val done = doneBatches(spark, t)
     val batchPins = pinnedSnapshots(spark, t)
       .collect { case (b, s) if !done.contains(b) => s }
-    val reannPins = reannotateRows(spark, t).groupBy(_._1).values.flatMap {
-      attempts =>
-        val latest = attempts.map(_._2).max
-        val latestDone = attempts.exists(a => a._2 == latest && !a._4)
-        if (latestDone) None
-        else attempts.collectFirst { case (_, `latest`, Some(s), true) => s }
-    }
-    (batchPins ++ reannPins).toSet
+    (batchPins ++ danglingAttempts(spark, t).values.flatten).toSet
   }
 
   /** Table maintenance for a long-lived work dir (Iceberg's
@@ -318,16 +325,11 @@ object Incremental {
     }
   }
 
-  def pendingReannotations(spark: SparkSession, workDir: String): Seq[Seq[String]] = {
-    val t = Tables(workDir)
-    // an id-set is pending iff its LATEST attempt (highest marker) has
-    // no done row — a completed replay supersedes the crashed attempt's
-    // dangling start
-    reannotateRows(spark, t).groupBy(_._1).toSeq.sortBy(_._1)
-      .flatMap { case (ids, attempts) =>
-        val latest = attempts.map(_._2).max
-        val latestDone = attempts.exists(a => a._2 == latest && !a._4)
-        if (latestDone) None else Some(ids.split(",").toSeq)
-      }
-  }
+  /** Doc-id sets of reannotate attempts that started but never recorded
+    * completion (crash recovery: replay each with [[reannotate]] —
+    * idempotent, and the replay gets its own attempt marker so the
+    * crashed attempt's dangling start row never re-flags it).
+    */
+  def pendingReannotations(spark: SparkSession, workDir: String): Seq[Seq[String]] =
+    danglingAttempts(spark, Tables(workDir)).keys.toSeq.sorted.map(_.split(",").toSeq)
 }

@@ -44,13 +44,6 @@ object Pipeline {
     docs.map(d => (d.doc_id, SpanOps.assemble(d.spans))).toDF("doc_id", "text")
   }
 
-  def mediaSpans(spark: SparkSession, docs: Dataset[InputDoc]): DataFrame = {
-    import spark.implicits._
-    docs.flatMap(d => d.spans.filter(_.kind == "media")
-      .map(s => (d.doc_id, s.media_ref, s.offset)))
-      .toDF("doc_id", "media_ref", "offset")
-  }
-
   /** Run the full pipeline over an input-doc dataset against a registry
     * snapshot. Pure function of (docs, registry) — the incremental loop
     * feeds back the grown registry (see [[Incremental]]).

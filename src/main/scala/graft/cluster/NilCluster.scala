@@ -256,7 +256,13 @@ object NilCluster {
   private val signBucketUdf = udf((v: Seq[Float]) => signBucket(v.toArray))
   private val signBandUdf = udf((v: Seq[Float], g: Int) => signBand(v.toArray, g))
 
-  private def blockedPairsDF(surfaces: DataFrame, blockCap: Int): DataFrame = {
+  /** Candidate pairs (src < dst) of `surface`s sharing a [[blockKeys]]
+    * key — within the same `group` column values, if any (the breakup
+    * pairs within each oversize cluster, as the local path does).
+    */
+  private def blockedPairsDF(surfaces: DataFrame, blockCap: Int,
+                             group: Seq[String] = Nil): DataFrame = {
+    val block = group :+ "bkey"
     val withKeys = surfaces
       .withColumn("bkey", explode(array_union(
         array_distinct(split(col("surface"), "\\s+")),
@@ -264,14 +270,14 @@ object NilCluster {
     // hot-block cap (same rule/constant as the local path): drop keys
     // whose membership exceeds BlockCap BEFORE the self-join — one tiny
     // aggregate instead of a quadratic blowup on stop-token blocks
-    val keyCounts = withKeys.groupBy("bkey")
+    val keyCounts = withKeys.groupBy(block.map(col): _*)
       .agg(count(lit(1)).as("bn"))
       .filter(col("bn") <= blockCap)
-      .select("bkey")
-    val capped = withKeys.join(keyCounts, Seq("bkey"))
-    val a = capped.select(col("bkey"), col("surface").as("src"))
-    val b = capped.select(col("bkey"), col("surface").as("dst"))
-    a.join(b, Seq("bkey"))
+      .select(block.map(col): _*)
+    val capped = withKeys.join(keyCounts, block)
+    val a = capped.select(block.map(col) :+ col("surface").as("src"): _*)
+    val b = capped.select(block.map(col) :+ col("surface").as("dst"): _*)
+    a.join(b, block)
       .filter(col("src") < col("dst"))
       .select("src", "dst").distinct()
   }
@@ -354,33 +360,10 @@ object NilCluster {
       if (bigPart.isEmpty) small
       else {
         val bigSurf = bigPart.select(col("cluster_key").as("pk"), col("surface")).distinct()
-        // breakup pair guard: oversize-cluster groups (> BlockCap) switch
-        // from all-pairs to token/prefix blocking within the group (the
-        // breakup criterion is STRING distance, so near pairs share
-        // token or 2-char-prefix keys), capped like blockedPairsDF;
-        // sub-cap groups keep the exact all-pairs join
-        val pkSizes = bigSurf.groupBy("pk").agg(count(lit(1)).as("pn"))
-        val pkSmall = bigSurf.join(
-          pkSizes.filter(col("pn") <= blockCap).select("pk"), Seq("pk"))
-        val pkHuge = bigSurf.join(
-          pkSizes.filter(col("pn") > blockCap).select("pk"), Seq("pk"))
-        val ebSmall = pkSmall.select(col("pk"), col("surface").as("src"))
-          .join(pkSmall.select(col("pk"), col("surface").as("dst")), Seq("pk"))
-          .filter(col("src") < col("dst"))
-          .select("src", "dst")
-        val hugeKeyed = pkHuge.withColumn("bkey", explode(array_union(
-          array_distinct(split(col("surface"), "\\s+")),
-          array(substring(col("surface"), 1, 2)))))
-        val hugeOk = hugeKeyed.groupBy("pk", "bkey")
-          .agg(count(lit(1)).as("bn"))
-          .filter(col("bn") <= blockCap).select("pk", "bkey")
-        val hugeCapped = hugeKeyed.join(hugeOk, Seq("pk", "bkey"))
-        val ebHuge = hugeCapped.select(col("pk"), col("bkey"), col("surface").as("src"))
-          .join(hugeCapped.select(col("pk"), col("bkey"), col("surface").as("dst")),
-            Seq("pk", "bkey"))
-          .filter(col("src") < col("dst"))
-          .select("src", "dst").distinct()
-        val eb = ebSmall.unionByName(ebHuge)
+        // same pair rule as the local path: token/2-char-prefix blocks
+        // within each oversize cluster, hot blocks capped — the breakup
+        // criterion is STRING distance, so near pairs share a key
+        val eb = blockedPairsDF(bigSurf, blockCap, Seq("pk"))
           .filter(damLevNormUdf(col("src"), col("dst")) < BreakupThreshold)
         val ccb = ConnectedComponents.run(spark,
           bigSurf.select(col("surface").as("id")), eb)

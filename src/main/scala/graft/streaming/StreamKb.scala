@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
-import graft.{Incremental, Pipeline}
+import graft.Incremental
 import graft.core.{InputDoc, SpanOps}
 
 /** Structured Streaming front-end over the KB-population engine.
@@ -14,7 +14,7 @@ import graft.core.{InputDoc, SpanOps}
   * pushed through 11 service hops one at a time. The Spark-native analog
   * is a document STREAM: `readStream` over an arriving-files directory,
   * micro-batched through the exact same per-batch population protocol as
-  * [[graft.Incremental]] (registry snapshot pinning, keyed MERGEs,
+  * [[graft.Incremental]] (registry snapshot pinning, keyed commits,
   * lineage-last commit), so a streaming deployment and a batch backfill
   * produce byte-identical KB tables.
   *
@@ -25,7 +25,7 @@ import graft.core.{InputDoc, SpanOps}
   * batch loop uses (tested there by killing mid-batch).
   *
   * Scale shape: each micro-batch is one bounded Pipeline.run (shuffles
-  * sized by batch volume, not table volume) and the IceLite MERGEs are
+  * sized by batch volume, not table volume) and the IceLite commits are
   * bucket-scoped O(batch). State in [[dedupFirstSeen]] is per-key
   * booleans in the state store — bounded by distinct-content count, and
   * spillable via RocksDB state store at cluster scale.
@@ -48,7 +48,7 @@ object StreamKb {
   }
 
   /** Drive KB population from a document stream. Each micro-batch runs
-    * the full pipeline against the then-current registry and MERGEs into
+    * the full pipeline against the then-current registry and commits into
     * the IceLite state tables under `workDir`; `checkpointDir` is the
     * Spark streaming checkpoint (source offsets). Entities discovered in
     * one micro-batch are linkable in the next — the reference's
@@ -61,15 +61,9 @@ object StreamKb {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[InputDoc], batchId: Long) =>
-        val spark = batch.sparkSession
-        val t = Incremental.Tables(workDir)
-        if (!t.registry.exists)
-          t.registry.overwrite(graft.kb.Registry.seed(spark).toDF())
-        val b = batchId.toInt
-        if (!Incremental.doneBatches(spark, t).contains(b)) {
-          val pinned = Incremental.pinnedSnapshots(spark, t).get(b)
-          Incremental.processBatch(spark, t, batch, b, pinned)
-        }
+        val (_, runBatch) = Incremental.resume(batch.sparkSession, workDir)
+        runBatch(batch, batchId.toInt) // false: a done batch replayed, skipped
+        ()
       }
       .start()
   }
@@ -120,19 +114,6 @@ object StreamKb {
     wm.groupBy(window(col(tsCol), windowLen), col("mention_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("ws"), col("mention_type"), col("n"))
-  }
-
-  /** Streaming NER+link WITHOUT table state — the stateless slice of the
-    * pipeline (sectioning, trie/regex NER, annotation-set merge) as a
-    * per-micro-batch transform suitable for `foreachBatch`-free sinks.
-    * Returns merged mentions for the batch; linking needs the registry
-    * and belongs in [[populate]].
-    */
-  def mentionsOf(spark: SparkSession,
-                 docs: Dataset[InputDoc]): Dataset[graft.core.Mention] = {
-    val trie = graft.ner.TrieNer.mentions(spark, docs)
-    val regex = graft.ner.RegexNer.mentions(spark, docs)
-    graft.merge.MergeAnnsets.merge(spark, Seq(trie, regex))
   }
 
   /** Open-session state: first/last event time (epoch ms) + event count. */

@@ -130,15 +130,6 @@ final case class IceLite(root: String, numBuckets: Int = 0,
 
   private def manifestDirs(id: Int): Seq[String] = manifestEntries(id).map(_._2)
 
-  /** `stampProps`: record the current bucket spec in PROPS. Safe ONLY
-    * when every live entry of the new snapshot was written under the
-    * current spec — i.e. at table creation or after a full rewrite. A
-    * pre-PROPS table's `b<k>:` labels may come from a DIFFERENT spec;
-    * stamping the current one would certify labels mergeInto then
-    * trusts, silently duplicating keys. Until a full rewrite stamps it,
-    * such legacy tables stay PROPS-less and mergeInto/replaceKeys treat
-    * every entry as touched (whole-table COW).
-    */
   /** Commit protocol with single-writer optimistic detection. The table
     * contract is ONE writer at a time (the Incremental loop); this guard
     * turns the common violation into an exception instead of a silent
@@ -152,6 +143,15 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     * for the same reason. A writer that has written its manifest but not
     * yet swapped remains undetectable without a lock server — documented
     * limit, same window real Iceberg closes with a catalog CAS.
+    *
+    * `stampProps` records the current bucket spec in PROPS. Safe ONLY
+    * when every live entry of the new snapshot was written under the
+    * current spec — at table creation or after a full rewrite. A
+    * pre-PROPS table's `b<k>:` labels may come from a DIFFERENT spec;
+    * stamping the current one would certify labels the keyed rewrite
+    * then trusts, silently duplicating keys. Until a full rewrite stamps
+    * it, such a legacy table stays PROPS-less and [[rewrite]] treats
+    * every entry as touched (whole-table COW).
     */
   private def commit(entries: Seq[(Int, String)], stampProps: Boolean = false,
                      schema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
@@ -309,8 +309,6 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     * manifest — at 10^12 docs a doc_id lookup plans 1/numBuckets of the
     * table's files instead of enumerating all of them (file listing,
     * not just row filtering, is the scale cost of a point read).
-    * Legacy unbucketed entries (bucket -1) may hold any key and are
-    * always included, mirroring mergeInto's always-touched rule.
     * Bucketed tables only (an unbucketed manifest has nothing to prune
     * by — callers there read + filter themselves). None if the table
     * was never written.
@@ -319,18 +317,30 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     require(bucketed, s"readKeyed needs a bucketed table: $root")
     require(keyVals.length == bucketKeys.length,
       s"readKeyed wants ${bucketKeys.length} key values, got ${keyVals.length}")
+    readPruned(spark, Set(bucketFor(keyVals).get), bucketKeys.zip(keyVals)
+      .map { case (k, v) => col(k) === lit(v) }.reduce(_ && _))
+  }
+
+  /** Bucket-pruned MULTI-point read for single-key bucketed tables:
+    * rows whose key is in `vals`, listing only the buckets the vals
+    * hash into — the shape of a reannotate / small-batch hydrate, where
+    * a handful of ids must not pay a whole-table file listing. None if
+    * the table was never written.
+    */
+  def readKeyedIn(spark: SparkSession, vals: Seq[Any]): Option[DataFrame] = {
+    require(bucketed && bucketKeys.length == 1,
+      s"readKeyedIn needs a single-key bucketed table: $root")
+    readPruned(spark, vals.map(v => bucketFor(Seq(v)).get).toSet,
+      col(bucketKeys.head).isin(vals: _*))
+  }
+
+  /** Rows of the LATEST snapshot passing `keyFilter`, read from only the
+    * data dirs that may hold a row of `buckets` ([[splitTouched]]).
+    */
+  private def readPruned(spark: SparkSession, buckets: Set[Int],
+                         keyFilter: org.apache.spark.sql.Column): Option[DataFrame] =
     latestSnapshot.map { id =>
-      val keyFilter = bucketKeys.zip(keyVals)
-        .map { case (k, v) => col(k) === lit(v) }
-        .reduce(_ && _)
-      val b = bucketFor(keyVals).get
-      // same legacy rule as mergeInto/replaceKeys: a pre-PROPS table's
-      // b<k> labels may come from a DIFFERENT spec — trust none of them
-      // (read every dir, like bucket -1) until a full rewrite stamps PROPS
-      val legacy = !Files.exists(propsFile)
-      val dirs = manifestEntries(id).collect {
-        case (bk, d) if legacy || bk == b || bk == -1 => s"$root/$d"
-      }
+      val dirs = splitTouched(id, buckets)._1.map(e => s"$root/${e._2}")
       val schema = schemaOf(id)
       if (dirs.nonEmpty)
         schema.map(s => spark.read.schema(s).parquet(dirs: _*))
@@ -338,6 +348,18 @@ final case class IceLite(root: String, numBuckets: Int = 0,
           .filter(keyFilter)
       else emptyPruned(spark, id, schema)
     }
+
+  /** Split snapshot `id`'s manifest entries into (may hold a row of
+    * `buckets`, cannot). Unlabeled entries (bucket -1: every entry of an
+    * unbucketed table, or a dir written before bucketing was configured)
+    * can hold ANY key. So can every entry of a pre-PROPS table: its b<k>
+    * labels may come from a DIFFERENT spec, so none is trusted until a
+    * full rewrite stamps PROPS.
+    */
+  private def splitTouched(id: Int, buckets: Set[Int]):
+      (Seq[(Int, String)], Seq[(Int, String)]) = {
+    val legacy = !Files.exists(propsFile)
+    manifestEntries(id).partition { case (b, _) => legacy || b < 0 || buckets(b) }
   }
 
   /** No data dir survived bucket pruning: the result is statically empty
@@ -358,32 +380,6 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     }
   }
 
-  /** Bucket-pruned MULTI-point read for single-key bucketed tables:
-    * rows whose key is in `vals`, listing only the buckets the vals
-    * hash into (plus legacy -1 dirs) — the shape of a reannotate /
-    * small-batch hydrate, where a handful of ids must not pay a
-    * whole-table file listing. None if the table was never written.
-    */
-  def readKeyedIn(spark: SparkSession, vals: Seq[Any]): Option[DataFrame] = {
-    require(bucketed && bucketKeys.length == 1,
-      s"readKeyedIn needs a single-key bucketed table: $root")
-    latestSnapshot.map { id =>
-      val keyFilter = col(bucketKeys.head).isin(vals: _*)
-      val wanted = vals.map(v => bucketFor(Seq(v)).get).toSet
-      // legacy rule: pre-PROPS bucket labels untrusted (see readKeyed)
-      val legacy = !Files.exists(propsFile)
-      val dirs = manifestEntries(id).collect {
-        case (bk, d) if legacy || wanted(bk) || bk == -1 => s"$root/$d"
-      }
-      val schema = schemaOf(id)
-      if (dirs.nonEmpty)
-        schema.map(s => spark.read.schema(s).parquet(dirs: _*))
-          .getOrElse(spark.read.parquet(dirs: _*))
-          .filter(keyFilter)
-      else emptyPruned(spark, id, schema)
-    }
-  }
-
   /** Read latest or an empty frame with the given schema. */
   def readOrEmpty(spark: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame =
     read(spark).getOrElse(
@@ -391,9 +387,11 @@ final case class IceLite(root: String, numBuckets: Int = 0,
 
   /** Deterministic bucket of the table's bucket-key tuple (murmur3,
     * fixed seed — stable across JVMs/partitionings, required for replay
-    * idempotency).
+    * idempotency). -1 on an unbucketed table: the label every entry of
+    * its manifest carries.
     */
-  private def bucketCol = pmod(hash(bucketKeys.map(col): _*), lit(numBuckets))
+  private def bucketCol =
+    if (bucketed) pmod(hash(bucketKeys.map(col): _*), lit(numBuckets)) else lit(-1)
 
   /** Write df split per bucket under dir; returns (bucket -> leaf dir).
     * With `sortBy`, rows are arranged (_b, sortBy...)-sorted within
@@ -403,7 +401,7 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     * the per-leaf files come out key-clustered.
     */
   private def writeBuckets(df: DataFrame, dir: String,
-                           sortBy: Seq[String] = Nil): Seq[(Int, String)] = {
+                           sortBy: Seq[String]): Seq[(Int, String)] = {
     val withB = df.withColumn("_b", bucketCol)
     val arranged =
       if (sortBy.isEmpty) withB
@@ -418,6 +416,18 @@ final case class IceLite(root: String, numBuckets: Int = 0,
       .toSeq)
   }
 
+  /** Write df as the next snapshot's data dir; returns its manifest
+    * entries (one per bucket leaf, or one unlabeled dir).
+    */
+  private def writeData(df: DataFrame, sortBy: Seq[String] = Nil): Seq[(Int, String)] = {
+    val dir = newDataDir()
+    if (bucketed) writeBuckets(df, dir, sortBy)
+    else {
+      df.write.mode("overwrite").parquet(s"$root/$dir")
+      Seq((-1, dir))
+    }
+  }
+
   /** Append rows as a new snapshot (previous data dirs stay live). A
     * source carrying NEW columns evolves the table schema (ADD COLUMN:
     * rows in untouched dirs read as null in the new column); a source
@@ -425,14 +435,8 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     */
   def append(df: DataFrame): Int = {
     val evolved = evolvedSchema(df.sparkSession, df.schema)
-    val out = conform(df, evolved)
-    val dir = newDataDir()
     val prev = latestSnapshot.map(manifestEntries).getOrElse(Seq.empty)
-    if (bucketed) commit(prev ++ writeBuckets(out, dir), schema = Some(evolved))
-    else {
-      out.write.mode("overwrite").parquet(s"$root/$dir")
-      commit(prev :+ ((-1, dir)), schema = Some(evolved))
-    }
+    commit(prev ++ writeData(conform(df, evolved)), schema = Some(evolved))
   }
 
   /** Replace the whole table content with df (new snapshot). The schema
@@ -440,138 +444,83 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     */
   def overwrite(df: DataFrame): Int = overwrite(df, Nil)
 
-  private def overwrite(df: DataFrame, sortBy: Seq[String]): Int = {
-    val dir = newDataDir()
-    if (bucketed)
-      commit(writeBuckets(df, dir, sortBy), stampProps = true,
-        schema = Some(df.schema))
-    else {
-      df.write.mode("overwrite").parquet(s"$root/$dir")
-      commit(Seq((-1, dir)), stampProps = true, schema = Some(df.schema))
-    }
-  }
-
-  /** Delete rows matching the predicate (copy-on-write of the full
-    * table — predicate pruning to buckets needs key-equality analysis a
-    * real Iceberg does; callers with key predicates should mergeInto).
-    */
-  def deleteWhere(spark: SparkSession, cond: org.apache.spark.sql.Column): Int =
-    read(spark) match {
-      case Some(cur) => overwrite(cur.filter(!coalesce(cond, lit(false))))
-      case None => throw new IllegalStateException(s"deleteWhere on missing table $root")
-    }
+  private def overwrite(df: DataFrame, sortBy: Seq[String]): Int =
+    commit(writeData(df, sortBy), stampProps = true, schema = Some(df.schema))
 
   /** MERGE INTO: upsert `source` by key columns — matched target rows are
     * replaced by the source row, unmatched source rows are inserted
     * (whole-row WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT).
     * Idempotent: replaying the same source yields the same table.
-    *
-    * Bucketed tables rewrite ONLY the buckets the source touches: the
-    * new snapshot reuses every untouched bucket's existing leaf dirs.
+    * Bucketed tables need the bucket keys among `keys` and rewrite only
+    * the buckets the source touches ([[rewrite]]).
     */
   def mergeInto(spark: SparkSession, source: DataFrame, keys: Seq[String]): Int =
-    read(spark) match {
-      // Creating a table from an EMPTY source would commit a data dir
-      // with zero parquet part files — unreadable ("unable to infer
-      // schema") on every later read. Leave the table absent instead
-      // (readOrEmpty supplies the schema to callers that need one).
-      case None => if (source.isEmpty) 0 else overwrite(source)
-      case Some(_) if bucketed =>
-        require(bucketKeys.forall(keys.contains),
-          s"bucket keys $bucketKeys must be a subset of merge keys $keys")
-        val evolved = evolvedSchema(spark, source.schema)
-        val entries = manifestEntries(latestSnapshot.get)
-        val srcB = source.withColumn("_b", bucketCol).cache()
-        val touched = srcB.select("_b").distinct().collect().map(_.getInt(0)).toSet
-        // legacy unbucketed entries (b = -1, e.g. a table created before
-        // bucketing was configured) can hold ANY key: always rewrite them
-        // (their rows land in proper buckets in the new snapshot). A
-        // pre-PROPS table's b<k> labels may come from a DIFFERENT spec —
-        // rewrite everything once; the commit then stamps PROPS.
-        val legacy = !Files.exists(propsFile)
-        val (touchedEntries, untouchedEntries) =
-          entries.partition { case (b, _) => legacy || b < 0 || touched.contains(b) }
-        // touched dirs may predate an earlier ADD COLUMN: read them under
-        // the SNAPSHOT schema so the rewrite backfills, same as the reader
-        val rd = schemaOf(latestSnapshot.get)
-          .map(spark.read.schema).getOrElse(spark.read)
-        val oldTouched: Option[DataFrame] =
-          if (touchedEntries.isEmpty) None
-          else Some(rd.parquet(touchedEntries.map(e => s"$root/${e._2}"): _*))
-        val srcPlain = conform(srcB.drop("_b"), evolved)
-        val merged = oldTouched match {
-          case None => srcPlain
-          case Some(old) =>
-            conform(old, evolved)
-              .join(srcPlain.select(keys.map(col): _*).distinct(), keys, "left_anti")
-              .unionByName(srcPlain)
-        }
-        val dir = newDataDir()
-        val written = writeBuckets(merged, dir)
-        srcB.unpersist()
-        commit(untouchedEntries ++ written, stampProps = legacy,
-          schema = Some(evolved))
-      case Some(target) =>
-        val evolved = evolvedSchema(spark, source.schema)
-        val kept = target.join(
-          source.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        overwrite(conform(kept, evolved).unionByName(conform(source, evolved)))
-    }
+    rewrite(spark, source, keys, None)
 
   /** Atomic slice replacement in ONE commit: target rows whose key tuple
     * (the columns of `delKeys`) matches a delKeys row OR appears among
     * `source`'s key tuples are dropped, and `source` rows are inserted,
     * as a single snapshot swap. This is the reannotate-shaped operation —
     * "replace every row belonging to these docs" — and doing it in one
-    * commit closes the crash window a deleteWhere-then-mergeInto sequence
-    * has (a kill between the two commits loses the docs' rows with no
+    * commit closes the crash window a delete-then-merge sequence of two
+    * commits has (a kill between them loses the docs' rows with no
     * marker to drive a replay). Including source's own key tuples in the
     * delete set makes a REPLAY of the same call idempotent even when
-    * source carries keys missing from delKeys.
-    *
-    * Bucketed tables require delKeys' columns to cover the bucket keys
-    * and rewrite ONLY the buckets touched by delKeys or source rows —
-    * O(batch), not O(table), same as mergeInto.
+    * source carries keys missing from delKeys. Bucketed tables need the
+    * bucket keys among delKeys' columns and rewrite only the buckets
+    * touched by delKeys or source rows ([[rewrite]]).
     */
-  def replaceKeys(spark: SparkSession, delKeys: DataFrame, source: DataFrame): Int = {
-    val keyCols = delKeys.columns.toSeq
-    read(spark) match {
+  def replaceKeys(spark: SparkSession, delKeys: DataFrame, source: DataFrame): Int =
+    rewrite(spark, source, delKeys.columns.toSeq, Some(delKeys))
+
+  /** The one copy-on-write rewrite behind [[mergeInto]] and
+    * [[replaceKeys]]: drop target rows whose `keys` tuple is among
+    * source's key tuples or `extraDel`'s rows, insert source, commit as
+    * one snapshot. Only entries that may hold a deleted key are rewritten
+    * ([[splitTouched]]); every other entry is reused as is — O(touched
+    * buckets), not O(table), at 10^12 docs. On an unbucketed table every
+    * entry is touched (whole-table COW). Touched dirs may predate an
+    * earlier ADD COLUMN, so they are read under the SNAPSHOT schema and
+    * backfill like the reader. The source is cached once, with its
+    * bucket, so the touched-bucket collect and the write do not evaluate
+    * it twice; `extraDel` is read by both (every caller passes a small
+    * key list). A table's first write does not cache: it probes for
+    * emptiness, then writes; caching the whole first batch there raised
+    * the incremental benchmark's peak RSS by about a tenth.
+    */
+  private def rewrite(spark: SparkSession, source: DataFrame, keys: Seq[String],
+                      extraDel: Option[DataFrame]): Int = {
+    require(bucketKeys.forall(keys.contains),
+      s"bucket keys $bucketKeys must be a subset of key columns $keys")
+    latestSnapshot match {
+      // Creating a table from an EMPTY source would commit a data dir
+      // with zero parquet part files — unreadable ("unable to infer
+      // schema") on every later read. Leave the table absent instead
+      // (readOrEmpty supplies the schema to callers that need one).
       case None => if (source.isEmpty) 0 else overwrite(source)
-      case Some(_) if bucketed =>
-        require(bucketKeys.forall(keyCols.contains),
-          s"bucket keys $bucketKeys must be a subset of delKeys columns $keyCols")
+      case Some(id) =>
+        val srcB = source.withColumn("_b", bucketCol).cache()
+        val srcPlain = srcB.drop("_b")
         val evolved = evolvedSchema(spark, source.schema)
-        val entries = manifestEntries(latestSnapshot.get)
-        val keysB = delKeys.unionByName(source.select(keyCols.map(col): _*))
-          .distinct().withColumn("_b", bucketCol).cache()
-        val touched = keysB.select("_b").distinct().collect()
-          .map(_.getInt(0)).toSet
-        // same legacy rule as mergeInto: pre-PROPS bucket labels are
-        // untrusted — rewrite everything once, then stamp
-        val legacy = !Files.exists(propsFile)
-        val (touchedEntries, untouchedEntries) =
-          entries.partition { case (b, _) => legacy || b < 0 || touched.contains(b) }
-        val rd = schemaOf(latestSnapshot.get)
-          .map(spark.read.schema).getOrElse(spark.read)
-        val oldTouched: Option[DataFrame] =
-          if (touchedEntries.isEmpty) None
-          else Some(rd.parquet(touchedEntries.map(e => s"$root/${e._2}"): _*))
-        val merged = oldTouched match {
-          case None => conform(source, evolved)
-          case Some(old) =>
-            conform(old, evolved).join(keysB.drop("_b"), keyCols, "left_anti")
-              .unionByName(conform(source, evolved))
-        }
-        val dir = newDataDir()
-        val written = writeBuckets(merged, dir)
-        keysB.unpersist()
-        commit(untouchedEntries ++ written, stampProps = legacy,
+        val srcKeys = srcB.select((keys :+ "_b").map(col): _*)
+        val delB = extraDel.fold(srcKeys)(d => d.select(keys.map(col): _*)
+          .withColumn("_b", bucketCol).unionByName(srcKeys))
+        val touched =
+          if (bucketed) delB.select("_b").distinct().collect().map(_.getInt(0)).toSet
+          else Set.empty[Int]
+        val (touchedEntries, untouchedEntries) = splitTouched(id, touched)
+        val rd = schemaOf(id).map(spark.read.schema).getOrElse(spark.read)
+        val merged =
+          if (touchedEntries.isEmpty) conform(srcPlain, evolved)
+          else conform(rd.parquet(touchedEntries.map(e => s"$root/${e._2}"): _*), evolved)
+            .join(delB.drop("_b").distinct(), keys, "left_anti")
+            .unionByName(conform(srcPlain, evolved))
+        val written = writeData(merged)
+        srcB.unpersist()
+        // no untouched entry left: every live entry is written under the
+        // current spec, so a legacy table gets its PROPS stamped now
+        commit(untouchedEntries ++ written, stampProps = untouchedEntries.isEmpty,
           schema = Some(evolved))
-      case Some(target) =>
-        val evolved = evolvedSchema(spark, source.schema)
-        val allKeys = delKeys.unionByName(source.select(keyCols.map(col): _*)).distinct()
-        val kept = target.join(allKeys, keyCols, "left_anti")
-        overwrite(conform(kept, evolved).unionByName(conform(source, evolved)))
     }
   }
 
@@ -611,12 +560,10 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     * byte-identically before and after — dirs they share with expired
     * ones survive. Manifests are deleted before data so a crash mid-way
     * leaves at worst unreferenced garbage (vacuum's job), never a kept
-    * manifest pointing at deleted files. Returns the expired ids.
-    */
-  /** Expire history beyond the last `keepLast` snapshots. `keepIds`
-    * pins additional snapshots that must survive regardless of age —
-    * e.g. registry snapshots recorded in unfinished batches' lineage
-    * pins, which a crash replay will time-travel to.
+    * manifest pointing at deleted files. `keepIds` pins additional
+    * snapshots that must survive regardless of age — e.g. registry
+    * snapshots recorded in unfinished batches' lineage pins, which a
+    * crash replay will time-travel to. Returns the expired ids.
     */
   def expireSnapshots(keepLast: Int = 1, keepIds: Set[Int] = Set.empty): Seq[Int] = {
     require(keepLast >= 1, "keepLast must be >= 1")

@@ -119,13 +119,6 @@ class IceLiteSpec extends SparkTestBase {
     assert(t.readSnapshot(spark, 1).count() == 100)
   }
 
-  test("deleteWhere removes matching rows only") {
-    val t = IceLite(tmp())
-    t.overwrite(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
-    t.deleteWhere(spark, col("id") === 2)
-    assert(t.read(spark).get.orderBy("id").collect().map(_.getInt(0)).toSeq == Seq(1, 3))
-  }
-
   test("replaceKeys = delete keyed rows + insert source in ONE commit") {
     val t = IceLite(tmp())
     t.overwrite(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
@@ -364,7 +357,8 @@ class IceLiteSpec extends SparkTestBase {
   test("readKeyed on a zero-dir snapshot returns an empty frame, not a throw") {
     val t = IceLite(tmp(), 8, Seq("doc_id"))
     t.append(Seq(("doc1", 1)).toDF("doc_id", "n"))
-    t.deleteWhere(spark, lit(true)) // empty table -> zero-dir manifest
+    // delete the only key, insert nothing: empty table -> zero-dir manifest
+    t.replaceKeys(spark, Seq("doc1").toDF("doc_id"), t.read(spark).get.limit(0))
     val got = t.readKeyed(spark, Seq("doc1")).get
     assert(got.isEmpty && got.columns.toSeq == Seq("doc_id", "n"))
     assert(t.readKeyedIn(spark, Seq("doc1", "doc2")).get.isEmpty)

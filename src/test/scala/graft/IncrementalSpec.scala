@@ -164,6 +164,36 @@ class IncrementalSpec extends SparkTestBase {
     assert(before == after)
   }
 
+  test("re-ingesting a doc replaces its mentions and triples") {
+    val dir = Files.createTempDirectory("incRe").toString
+    val t = Incremental.Tables(dir)
+    t.registry.overwrite(graft.kb.Registry.seed(spark).toDF())
+    val oldD1 = doc("d1", "spark with fast key inside")
+    val newD1 = doc("d1", "slow part and merge join")
+    Incremental.processBatch(spark, t, spark.createDataset(Seq(oldD1, corpus(1))), 0, None)
+    val resent = spark.createDataset(Seq(newD1))
+    Incremental.processBatch(spark, t, resent, 1, None)
+
+    // what the second run linked: the pipeline over the new text against
+    // the registry snapshot that run pinned
+    val snap = Incremental.pinnedSnapshots(spark, t)(1)
+    val res = Pipeline.run(spark, resent, t.registry.readSnapshot(spark, snap))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val d1 = col("doc_id") === "d1"
+    assert(rows(t.mentions.read(spark).get.filter(d1)) ==
+      rows(res.linked.select(Incremental.MentionCols.map(col): _*)))
+    val d1Triples = rows(t.triples.read(spark).get.filter(d1))
+    assert(d1Triples == rows(res.triples))
+    assert(d1Triples.nonEmpty)
+    // nothing that names an entity of the old text only survives
+    Seq("spark", "fast key").foreach { e =>
+      assert(!d1Triples.exists(_.contains(e)), s"stale triple naming $e: $d1Triples")
+    }
+    assert(t.documents.read(spark).get.filter(d1).as[InputDoc].collect().toSeq == Seq(newD1))
+    // the other doc of the first batch keeps its rows
+    assert(!t.mentions.read(spark).get.filter(col("doc_id") === "d2").isEmpty)
+  }
+
   test("reannotate is crash-safe: one commit per table, no delete window") {
     val docs = spark.createDataset(corpus)
     val dir = Files.createTempDirectory("incR").toString

@@ -30,12 +30,21 @@ class NilClusterSpec extends SparkTestBase {
   }
 
   test("distributed path produces identical cluster keys") {
-    val df = surfaces.toDF("surface")
-    val dist = NilCluster.clusterSurfacesDistributed(spark, df)
-      .select("surface", "cluster_key").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val local = NilCluster.clusterSurfacesLocal(surfaces).view.mapValues(_._1).toMap
-    assert(dist == local)
+    // second input: one cluster above BreakupSize whose breakup must pair
+    // through blocks on both paths — q is 0.07 from p (under the breakup
+    // threshold) but shares no token or 2-char prefix with it, so the
+    // breakup leaves q a singleton; an all-pairs breakup would not
+    val p = "abcdefghijklmn"
+    val q = "bacdefghijklmn"
+    val breakup = Seq(p, q, p + " x", q + " x") ++
+      ('a' to 'z').filterNot(Set('n', 'x')).map(c => "abcdefghijklm" + c)
+    Seq(surfaces, breakup).foreach { in =>
+      val dist = NilCluster.clusterSurfacesDistributed(spark, in.toDF("surface"))
+        .select("surface", "cluster_key").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val local = NilCluster.clusterSurfacesLocal(in).view.mapValues(_._1).toMap
+      assert(dist == local)
+    }
   }
 
   test("forced distributed path equals the local path end-to-end, no forced broadcast") {

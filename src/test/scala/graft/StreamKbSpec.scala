@@ -83,6 +83,20 @@ class StreamKbSpec extends SparkTestBase {
     val v1 = t.triples.latestSnapshot.get
     StreamKb.populate(StreamKb.docStream(spark, in), w, ck).awaitTermination(180000)
     assert(t.triples.latestSnapshot.get == v1)
+
+    // s1 re-delivered with new text in a later micro-batch replaces its
+    // rows: none of its old mentions or triples survive, s2 keeps its own
+    stage(in, Seq(doc("s1", "spark customer window")))
+    StreamKb.populate(StreamKb.docStream(spark, in), w, ck).awaitTermination(180000)
+    assert(Incremental.doneBatches(spark, t) == Set(0, 1, 2))
+    def objsOf(id: String) = t.triples.read(spark).get
+      .filter(col("doc_id") === id && col("pred") === ":mentions")
+      .select("obj").collect().map(_.getString(0)).toSet
+    assert(objsOf("s1").nonEmpty && !objsOf("s1").exists(_.endsWith("slow part")))
+    assert(objsOf("s2").exists(_.endsWith("slow part")))
+    val s1Mentions = t.mentions.read(spark).get.filter(col("doc_id") === "s1")
+      .select("mention").collect().map(_.getString(0)).toSet
+    assert(s1Mentions.nonEmpty && !s1Mentions.contains("slow part"), s"$s1Mentions")
   }
 
   test("dedupFirstSeen drops cross-batch duplicates, keeps min doc_id within a batch") {
